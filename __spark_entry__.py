@@ -33,6 +33,7 @@ from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.operators import 
     similarity,
     sketches,
 )
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark import streaming
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.plans import flagship
 
 # --------------------------------------------------------------------------
@@ -6345,16 +6346,11 @@ def q_streaming_cdc_upsert(spark, sf):
     flat = unwrap_rewrite(envelopes, keep=("_offset",))
     state_dir = tempfile.mkdtemp(prefix="cdc_upsert_state_")
     with _stream_partitions(spark):
-        q = (
-            flat.writeStream.outputMode("append")
-            .foreachBatch(
-                keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset")
-            )
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
+        streaming.run_state_stream(
+            flat,
+            state_dir,
+            keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset"),
         )
-        q.awaitTermination()
     return read_state(spark, state_dir)
 
 
@@ -6612,18 +6608,11 @@ def q_streaming_avro_tombstone(spark, sf):
     )
     state_dir = tempfile.mkdtemp(prefix="avro_tomb_state_")
     with _stream_partitions(spark):
-        q = (
-            flat.writeStream.outputMode("append")
-            .foreachBatch(
-                keyed_upsert_sink(
-                    state_dir, keys=["user_id"], offset_col="_offset"
-                )
-            )
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
+        streaming.run_state_stream(
+            flat,
+            state_dir,
+            keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset"),
         )
-        q.awaitTermination()
     return read_state(spark, state_dir).select(
         "user_id",
         F.col("event_type").alias("latest_event_type"),
@@ -6784,16 +6773,11 @@ def q_streaming_pull_query(spark, sf):
     flat = unwrap_rewrite(envelopes, keep=("_offset",))
     state_dir = tempfile.mkdtemp(prefix="pull_query_state_")
     with _stream_partitions(spark):
-        q = (
-            flat.writeStream.outputMode("append")
-            .foreachBatch(
-                keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset")
-            )
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
+        streaming.run_state_stream(
+            flat,
+            state_dir,
+            keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset"),
         )
-        q.awaitTermination()
     return read_state(spark, state_dir).filter(
         F.col("user_id").isin(_PULL_KEYS)
     )
@@ -6893,14 +6877,9 @@ def q_streaming_topn(spark, sf):
     )
     state_dir = tempfile.mkdtemp(prefix="stream_topn_")
     with _stream_partitions(spark):
-        q = (
-            src.writeStream.outputMode("append")
-            .foreachBatch(topn_sink(state_dir, "value", 20, ["event_id"]))
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
+        streaming.run_state_stream(
+            src, state_dir, topn_sink(state_dir, "value", 20, ["event_id"])
         )
-        q.awaitTermination()
     return read_state(spark, state_dir)
 
 
@@ -7063,16 +7042,19 @@ def q_streaming_minhash_dedup(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.dedup import (
+        dedup_batch,
         read_flags,
-        run_minhash_dedup_stream,
     )
 
     base = tempfile.mkdtemp(prefix="stream_dedup_")
+    state, out = f"{base}/state", f"{base}/out"
     schema = _catalog_table_schema(spark, sf, "documents")
     sdf = spark.readStream.schema(schema).parquet(f"{sf}/documents.parque[t]")
     with _stream_partitions(spark):
-        run_minhash_dedup_stream(
-            sdf.select("doc_id", "text"), f"{base}/state", f"{base}/out"
+        streaming.run_state_stream(
+            sdf.select("doc_id", "text"),
+            state,
+            lambda b, i: dedup_batch(b, state, out, i),
         )
     return read_flags(spark, f"{base}/out")
 
@@ -7183,16 +7165,19 @@ def q_streaming_embedding_dedup(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.embdedup import (
+        embdedup_batch,
         read_embdedup_flags,
-        run_embdedup_stream,
     )
 
     base = tempfile.mkdtemp(prefix="stream_embdedup_")
+    state, out = f"{base}/state", f"{base}/out"
     schema = _catalog_table_schema(spark, sf, "embeddings")
     sdf = spark.readStream.schema(schema).parquet(f"{sf}/embeddings.parque[t]")
     with _stream_partitions(spark):
-        run_embdedup_stream(
-            sdf.select("vec_id", "embedding"), f"{base}/state", f"{base}/out"
+        streaming.run_state_stream(
+            sdf.select("vec_id", "embedding"),
+            state,
+            lambda b, i: embdedup_batch(b, state, out, i),
         )
     return read_embdedup_flags(spark, f"{base}/out")
 
@@ -7230,19 +7215,18 @@ def q_streaming_hll(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_hll_batch,
         read_hll_estimate,
-        run_hll_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_hll_")
+    state = tempfile.mkdtemp(prefix="stream_hll_")
     with _stream_partitions(spark):
-        run_hll_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("event_type", "event_id"),
-            f"{base}/state",
-            "event_id",
-            ["event_type"],
+            state,
+            lambda b, i: merge_hll_batch(b, state, i, "event_id", ["event_type"]),
         )
-    return read_hll_estimate(spark, f"{base}/state", ["event_type"])
+    return read_hll_estimate(spark, state, ["event_type"])
 
 
 @_q("streaming_ohlc", _REGISTRY["ohlc_bars"][1])
@@ -7255,20 +7239,20 @@ def q_streaming_ohlc(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.bars import (
+        merge_bars_batch,
         read_bars,
-        run_bars_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ohlc_")
+    state = tempfile.mkdtemp(prefix="stream_ohlc_")
     with _stream_partitions(spark):
-        run_bars_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select(
                 "event_type", "ts", "value", "event_id"
             ),
-            f"{base}/state",
-            key_cols=["event_type"],
+            state,
+            lambda b, i: merge_bars_batch(b, state, i, ["event_type"]),
         )
-    return read_bars(spark, f"{base}/state", ["event_type"])
+    return read_bars(spark, state, ["event_type"])
 
 
 @_q(
@@ -7293,19 +7277,26 @@ def q_streaming_stateful_agg(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.stateful import (
-        read_counter,
-        run_stateful_counter,
+        stateful_counter,
+    )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import (
+        keyed_upsert_sink,
+        read_state,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_stateful_")
+    state = tempfile.mkdtemp(prefix="stream_stateful_")
     with _stream_partitions(spark):
-        run_stateful_counter(
-            _events_stream(spark, sf).select(
-                "user_id", "event_id", "event_type", "value"
+        streaming.run_state_stream(
+            stateful_counter(
+                _events_stream(spark, sf).select(
+                    "user_id", "event_id", "event_type", "value"
+                )
             ),
-            base,
+            state,
+            keyed_upsert_sink(state, ["user_id"], "last_offset", deleted_col=None),
+            output_mode="update",
         )
-    return read_counter(spark, base).select(
+    return read_state(spark, state).select(
         "user_id",
         "n_events",
         "total_cents",
@@ -7329,18 +7320,18 @@ def q_streaming_gap_fill(spark, sf):
         gap_fill_from_daily,
     )
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.bars import (
+        merge_bars_batch,
         read_bars,
-        run_bars_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_gapfill_")
+    state = tempfile.mkdtemp(prefix="stream_gapfill_")
     with _stream_partitions(spark):
-        run_bars_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("user_id", "ts", "value", "event_id"),
-            f"{base}/state",
-            key_cols=["user_id"],
+            state,
+            lambda b, i: merge_bars_batch(b, state, i, ["user_id"]),
         )
-    daily = read_bars(spark, f"{base}/state", ["user_id"]).select(
+    daily = read_bars(spark, state, ["user_id"]).select(
         "user_id", F.col("bucket_ts").alias("day"), F.col("close").alias("obs_value")
     )
     return gap_fill_from_daily(daily, ["user_id"])
@@ -7358,19 +7349,19 @@ def q_streaming_cms(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_cms_batch,
         read_cms_topk,
-        run_cms_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_cms_")
+    state = tempfile.mkdtemp(prefix="stream_cms_")
     with _stream_partitions(spark):
-        run_cms_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("user_id"),
-            f"{base}/state",
-            "user_id",
+            state,
+            lambda b, i: merge_cms_batch(b, state, i, "user_id"),
         )
     candidates = _events(spark, sf).select("user_id").distinct()
-    return read_cms_topk(spark, f"{base}/state", candidates, "user_id")
+    return read_cms_topk(spark, state, candidates, "user_id")
 
 
 @_q(
@@ -8575,18 +8566,20 @@ def q_streaming_bm25(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.index import (
+        merge_index_batch,
         read_bm25_topk,
-        run_index_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_bm25_")
+    state = tempfile.mkdtemp(prefix="stream_bm25_")
     schema = _catalog_table_schema(spark, sf, "documents")
     sdf = spark.readStream.schema(schema).parquet(f"{sf}/documents.parque[t]")
     with _stream_partitions(spark):
-        run_index_stream(
-            sdf.select("doc_id", "text"), f"{base}/state", _BM25_TERMS
+        streaming.run_state_stream(
+            sdf.select("doc_id", "text"),
+            state,
+            lambda b, i: merge_index_batch(b, state, _BM25_TERMS, i),
         )
-    return read_bm25_topk(spark, f"{base}/state")
+    return read_bm25_topk(spark, state)
 
 
 @_q(
@@ -9198,19 +9191,18 @@ def q_streaming_quantile_sketch(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_hist_batch,
         read_hist_quantiles,
-        run_hist_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_hist_")
+    state = tempfile.mkdtemp(prefix="stream_hist_")
     with _stream_partitions(spark):
-        run_hist_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("event_type", "value"),
-            f"{base}/state",
-            "value",
-            ["event_type"],
+            state,
+            lambda b, i: merge_hist_batch(b, state, i, "value", ["event_type"]),
         )
-    return read_hist_quantiles(spark, f"{base}/state", ["event_type"])
+    return read_hist_quantiles(spark, state, ["event_type"])
 
 
 @_q(
@@ -9612,15 +9604,17 @@ def q_streaming_cohort_matrix(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.cohort import (
+        merge_cohort_batch,
         read_cohort_matrix,
-        run_cohort_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_cohort_")
+    state = tempfile.mkdtemp(prefix="stream_cohort_")
     sdf = _events_stream(spark, sf).select("user_id", "ts")
     with _stream_partitions(spark):
-        run_cohort_stream(sdf, f"{base}/state")
-    return read_cohort_matrix(spark, f"{base}/state")
+        streaming.run_state_stream(
+            sdf, state, lambda b, i: merge_cohort_batch(b, state, i)
+        )
+    return read_cohort_matrix(spark, state)
 
 
 @_q("streaming_ltv_curve", _REGISTRY["ltv_cohort_curve"][1])
@@ -9637,17 +9631,17 @@ def q_streaming_ltv_curve(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.cohort import (
+        merge_ltv_batch,
         read_ltv_curve,
-        run_ltv_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ltv_")
+    state = tempfile.mkdtemp(prefix="stream_ltv_")
     sdf = _events_stream(spark, sf).select(
         "user_id", "ts", "event_type", "value"
     )
     with _stream_partitions(spark):
-        run_ltv_stream(sdf, f"{base}/state")
-    return read_ltv_curve(spark, f"{base}/state")
+        streaming.run_state_stream(sdf, state, lambda b, i: merge_ltv_batch(b, state, i))
+    return read_ltv_curve(spark, state)
 
 
 @_q(
@@ -9863,20 +9857,14 @@ def q_streaming_late_drop(spark, sf):
         upsert_batch(
             bdf.withColumn("_off", F.lit(bid)),
             state,
+            bid,
             ["window_start", "event_type"],
             "_off",
             deleted_col=None,
         )
 
     with _stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming.run_state_stream(agg, state, _sink, output_mode="update")
     return read_state(spark, state).select("window_start", "event_type", "n")
 
 
@@ -11005,11 +10993,11 @@ def q_streaming_psi_drift(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.drift import (
+        merge_drift_batch,
         read_psi,
-        run_drift_stream,
     )
 
-    [b] = (
+    [mid] = (
         _events(spark, sf)
         .agg(F.min("ts").alias("a"), F.max("ts").alias("z"))
         .select(
@@ -11019,14 +11007,14 @@ def q_streaming_psi_drift(spark, sf):
         )
         .collect()
     )
-    base = tempfile.mkdtemp(prefix="stream_psi_")
+    state = tempfile.mkdtemp(prefix="stream_psi_")
     with _stream_partitions(spark):
-        run_drift_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("event_type", "ts", "value"),
-            f"{base}/state",
-            b.m,
+            state,
+            lambda b, i: merge_drift_batch(b, state, i, mid.m),
         )
-    return read_psi(spark, f"{base}/state")
+    return read_psi(spark, state)
 
 
 @_q(
@@ -11066,24 +11054,24 @@ def q_streaming_weighted_sample(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.reservoir import (
+        merge_reservoir_batch,
         read_reservoir,
-        run_reservoir_stream,
     )
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sources import (
         file_stream,
     )
 
     schema = load(spark, sf, "orders").schema
-    base = tempfile.mkdtemp(prefix="stream_resv_")
+    state = tempfile.mkdtemp(prefix="stream_resv_")
     with _stream_partitions(spark):
-        run_reservoir_stream(
+        streaming.run_state_stream(
             file_stream(spark, f"{sf}/orders.parque[t]", schema),
-            f"{base}/state",
-            weight_col="o_totalprice",
-            k=100,
-            id_col="o_orderkey",
+            state,
+            lambda b, i: merge_reservoir_batch(
+                b, state, i, "o_totalprice", k=100, id_col="o_orderkey"
+            ),
         )
-    return read_reservoir(spark, f"{base}/state").select(
+    return read_reservoir(spark, state).select(
         "o_orderkey", "o_totalprice", "samp_key"
     )
 
@@ -11102,19 +11090,20 @@ def q_streaming_event_transitions(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.transitions import (
+        merge_transitions_batch,
         read_transitions,
-        run_transitions_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_trans_")
+    state = tempfile.mkdtemp(prefix="stream_trans_")
     with _stream_partitions(spark):
-        run_transitions_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select(
                 "user_id", "event_type", "ts", "event_id"
             ),
-            f"{base}/state",
+            state,
+            lambda b, i: merge_transitions_batch(b, state, i),
         )
-    return read_transitions(spark, f"{base}/state")
+    return read_transitions(spark, state)
 
 
 @_q("streaming_interarrival", _REGISTRY["interarrival_stats"][1])
@@ -11129,17 +11118,18 @@ def q_streaming_interarrival(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.interarrival import (
+        merge_interarrival_batch,
         read_interarrival,
-        run_interarrival_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_gap_")
+    state = tempfile.mkdtemp(prefix="stream_gap_")
     with _stream_partitions(spark):
-        run_interarrival_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("user_id", "ts", "event_id"),
-            f"{base}/state",
+            state,
+            lambda b, i: merge_interarrival_batch(b, state, i),
         )
-    return read_interarrival(spark, f"{base}/state")
+    return read_interarrival(spark, state)
 
 
 @_q(
@@ -11713,17 +11703,18 @@ def q_streaming_out_of_order(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.disorder import (
+        merge_disorder_batch,
         read_disorder,
-        run_disorder_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ooo_")
+    state = tempfile.mkdtemp(prefix="stream_ooo_")
     with _stream_partitions(spark):
-        run_disorder_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("event_type", "ts", "event_id"),
-            f"{base}/state",
+            state,
+            lambda b, i: merge_disorder_batch(b, state, i),
         )
-    return read_disorder(spark, f"{base}/state")
+    return read_disorder(spark, state)
 
 
 @_q(
@@ -11995,19 +11986,20 @@ def q_streaming_scd2(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.scd2 import (
+        merge_scd2_batch,
         read_scd2,
-        run_scd2_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_scd2_")
+    state = tempfile.mkdtemp(prefix="stream_scd2_")
     with _stream_partitions(spark):
-        run_scd2_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf)
             .filter(F.col("event_type") == "purchase")
             .select("user_id", "event_id", "value", "ts"),
-            f"{base}/state",
+            state,
+            lambda b, i: merge_scd2_batch(b, state, i),
         )
-    return read_scd2(spark, f"{base}/state")
+    return read_scd2(spark, state)
 
 
 @_q("streaming_funnel", _REGISTRY["event_funnel"][1])
@@ -12022,17 +12014,18 @@ def q_streaming_funnel(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.funnel import (
+        merge_funnel_batch,
         read_funnel,
-        run_funnel_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_funnel_")
+    state = tempfile.mkdtemp(prefix="stream_funnel_")
     with _stream_partitions(spark):
-        run_funnel_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select("user_id", "event_type", "ts"),
-            f"{base}/state",
+            state,
+            lambda b, i: merge_funnel_batch(b, state, i),
         )
-    return read_funnel(spark, f"{base}/state")
+    return read_funnel(spark, state)
 
 
 _FUNNEL_WINDOW = "INTERVAL 12 HOUR"
@@ -12275,23 +12268,24 @@ def q_streaming_temperature_mixture(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.mixture import (
+        merge_mixture_batch,
         read_mixture,
-        run_mixture_stream,
     )
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sources import (
         file_stream,
     )
 
     schema = load(spark, sf, "documents").schema
-    base = tempfile.mkdtemp(prefix="stream_mix_")
+    state = tempfile.mkdtemp(prefix="stream_mix_")
     with _stream_partitions(spark):
-        run_mixture_stream(
+        streaming.run_state_stream(
             file_stream(spark, f"{sf}/documents.parque[t]", schema).select(
                 "doc_id", "source"
             ),
-            f"{base}/state",
+            state,
+            lambda b, i: merge_mixture_batch(b, state, i),
         )
-    return read_mixture(spark, f"{base}/state", budget=float(_TEMP_BUDGET))
+    return read_mixture(spark, state, budget=float(_TEMP_BUDGET))
 
 
 def _oracle_pq() -> str:
@@ -12705,20 +12699,20 @@ def q_streaming_ewma(spark, sf):
     import tempfile
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.ewma import (
+        merge_ewma_batch,
         read_ewma,
-        run_ewma_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ewma_")
+    state = tempfile.mkdtemp(prefix="stream_ewma_")
     with _stream_partitions(spark):
-        run_ewma_stream(
+        streaming.run_state_stream(
             _events_stream(spark, sf).select(
                 "event_type", "ts", "value", "event_id"
             ),
-            f"{base}/state",
-            key_cols=["event_type"],
+            state,
+            lambda b, i: merge_ewma_batch(b, state, i, ["event_type"]),
         )
-    return read_ewma(spark, f"{base}/state", ["event_type"])
+    return read_ewma(spark, state, ["event_type"])
 
 
 @_q(

@@ -1,5 +1,6 @@
-"""Crash-replay / exactly-once properties for every version-per-batch
-state sink (the `_commit` protocol in streaming/transitions.py).
+"""Crash-replay / exactly-once properties for every streaming state
+sink (the batch-id commit protocol in streaming/upsert.py:
+``write_version`` plus ``read_prior``).
 
 The protocol's claim: each micro-batch commits as state version
 ``v=<batch_id>`` and a re-run reads the greatest version STRICTLY BELOW
@@ -8,10 +9,14 @@ hit before the pointer swap, leaving an orphan version directory, or
 after the swap but before the checkpoint commit, causing a full
 re-delivery) is a deterministic overwrite, never a double-count.
 
-These properties pin that claim for all eight sinks sharing `_commit`:
-under hypothesis-generated batch splits and an injected failure at a
-hypothesis-chosen batch, the final state must equal the clean run's
-state exactly.  Two failure modes per example:
+These properties pin that claim for every sink that commits through
+``write_version`` — the sequence folds, the sketch and rollup folds,
+the top-n sink and the keyed upsert sink: under hypothesis-generated
+batch splits and an injected failure at a hypothesis-chosen batch, the
+final state must equal the clean run's state exactly.  Additive folds
+(CMS, histogram, drift, the bars' tick count) would double-count a
+re-delivered batch without the protocol.  Two failure modes per
+example:
 
 - ``redeliver``: the batch commits fully, then is delivered again
   (crash between pointer swap and checkpoint write — exactly what
@@ -87,20 +92,89 @@ def _docs_df(spark, rs):
     )
 
 
+def _cdc_df(spark, rs):
+    """Events as a keyed changelog: purchases play tombstones."""
+    return _events_df(spark, rs).select(
+        "user_id", "event_id", "value",
+        (F.col("event_type") == "purchase").alias("__deleted"),
+    )
+
+
+# drift period boundary: between the two event days _events_df spans
+_DRIFT_MID_US = 1_704_153_600_000_000  # 2024-01-02 00:00:00 UTC
+
+
 def _sinks():
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
+        bars,
         cohort,
         disorder,
+        drift,
+        ewma,
         funnel,
         index,
         interarrival,
         mixture,
+        reservoir,
         scd2,
+        sinks,
+        sketches,
         transitions,
+        upsert,
     )
 
     terms = ["w0", "w1", "w2"]
+    # state-table sinks whose read path is the raw state itself
+    raw = upsert.read_state
     return {
+        "hll": (
+            _events_df,
+            lambda b, d, i: sketches.merge_hll_batch(b, d, i, "event_id", ["event_type"]),
+            lambda spark, d: sketches.read_hll_estimate(spark, d, ["event_type"]),
+        ),
+        "cms": (
+            _events_df,
+            lambda b, d, i: sketches.merge_cms_batch(b, d, i, "user_id"),
+            raw,
+        ),
+        "hist": (
+            _events_df,
+            lambda b, d, i: sketches.merge_hist_batch(b, d, i, "value", ["event_type"]),
+            raw,
+        ),
+        "drift": (
+            _events_df,
+            lambda b, d, i: drift.merge_drift_batch(b, d, i, _DRIFT_MID_US),
+            raw,
+        ),
+        "bars": (
+            _events_df,
+            lambda b, d, i: bars.merge_bars_batch(b, d, i, ["event_type"]),
+            raw,
+        ),
+        "ewma": (
+            _events_df,
+            lambda b, d, i: ewma.merge_ewma_batch(b, d, i, ["event_type"]),
+            raw,
+        ),
+        "reservoir": (
+            _events_df,
+            lambda b, d, i: reservoir.merge_reservoir_batch(
+                b, d, i, "value", k=5, id_col="event_id"
+            ),
+            raw,
+        ),
+        "cohort": (_events_df, cohort.merge_cohort_batch, cohort.read_cohort_matrix),
+        "topn": (
+            _events_df,
+            lambda b, d, i: sinks.topn_sink(d, "value", 5, ["event_id"])(b, i),
+            raw,
+        ),
+        "keyed_upsert": (
+            _cdc_df,
+            lambda b, d, i: upsert.keyed_upsert_sink(d, ["user_id"], "event_id")(b, i),
+            raw,
+        ),
         "transitions": (
             _events_df,
             transitions.merge_transitions_batch,
@@ -174,19 +248,7 @@ def _run(spark, mkdf, merge, read, batches, crash_at=None, mode=None):
 import pytest
 
 
-@pytest.mark.parametrize(
-    "sink",
-    [
-        "transitions",
-        "scd2",
-        "funnel",
-        "disorder",
-        "interarrival",
-        "ltv",
-        "mixture",
-        "bm25_index",
-    ],
-)
+@pytest.mark.parametrize("sink", list(_sinks()))
 @given(rs=_rows, cuts=_cuts, crash_frac=st.floats(0, 1), mode=_mode)
 @_SETTINGS
 def test_commit_protocol_is_exactly_once_under_crash(

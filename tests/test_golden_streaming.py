@@ -87,9 +87,13 @@ def test_streaming_dedup_batch_split_invariant(spark, tmp_path):
     from pyspark.sql import functions as F  # noqa: F401
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.dedup import (
+        dedup_batch,
         read_flags,
-        run_minhash_dedup_stream,
     )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import run_state_stream
+
+    def run_minhash_dedup_stream(sdf, state, out):
+        run_state_stream(sdf, state, lambda b, i: dedup_batch(b, state, out, i))
 
     tmpl = (
         "the quick brown fox jumps over the lazy dog while the cat "
@@ -223,8 +227,8 @@ def test_streaming_transitions_bridge_batch_boundaries(spark, tmp_path):
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.transitions import (
         merge_transitions_batch,
         read_transitions,
-        run_transitions_stream,
     )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import run_state_stream
 
     src = tmp_path / "src"
     src.mkdir()
@@ -259,7 +263,9 @@ def test_streaming_transitions_bridge_batch_boundaries(spark, tmp_path):
         .parquet(str(src))
     )
     state = str(tmp_path / "state")
-    run_transitions_stream(stream, state)
+    run_state_stream(
+        stream, state, lambda b, i: merge_transitions_batch(b, state, i)
+    )
 
     out = {(r.from_type, r.to_type): (r.n, r.p)
            for r in read_transitions(spark, state).collect()}
@@ -270,8 +276,8 @@ def test_streaming_transitions_bridge_batch_boundaries(spark, tmp_path):
     }
 
     # Crash replay: re-apply the last batch with its original batch id —
-    # the version-per-batch commit recomputes from the prior version, so
-    # counts are unchanged.
+    # the batch-id commit recomputes from the prior version, so counts
+    # are unchanged.
     last = spark.createDataFrame(
         [(1, "2024-01-01 10:04:00", "B", 7)], cols
     ).withColumn("ts", F.to_timestamp("ts_s")).select(
@@ -365,8 +371,8 @@ def test_streaming_ewma_ring_matches_batch_across_batches(spark, tmp_path):
     rows0 = [("A", f"2024-01-01 10:{m:02d}:00", float(m), m) for m in range(6)]
     rows1 = [("A", f"2024-01-01 10:{m:02d}:00", float(m), m) for m in range(6, 12)]
     state = str(tmp_path / "state")
-    merge_ewma_batch(mkdf(rows0), state, ["event_type"], "ts", "value", "event_id")
-    merge_ewma_batch(mkdf(rows1), state, ["event_type"], "ts", "value", "event_id")
+    merge_ewma_batch(mkdf(rows0), state, 0, ["event_type"], "ts", "value", "event_id")
+    merge_ewma_batch(mkdf(rows1), state, 1, ["event_type"], "ts", "value", "event_id")
 
     [got] = read_ewma(spark, state, ["event_type"]).collect()
     full = batch_ewma(mkdf(rows0 + rows1), ["event_type"], "ts", "value",
@@ -374,8 +380,8 @@ def test_streaming_ewma_ring_matches_batch_across_batches(spark, tmp_path):
     assert got.event_id == full.event_id == 11
     assert got.ewma == full.ewma
 
-    # replay batch 1: the kept top-8 set cannot change
-    merge_ewma_batch(mkdf(rows1), state, ["event_type"], "ts", "value", "event_id")
+    # replay batch 1's rows as a new batch: the kept top-8 set cannot change
+    merge_ewma_batch(mkdf(rows1), state, 2, ["event_type"], "ts", "value", "event_id")
     [again] = read_ewma(spark, state, ["event_type"]).collect()
     assert again.ewma == got.ewma
 
@@ -511,9 +517,13 @@ def test_streaming_embdedup_batch_split_invariant(spark, tmp_path):
     import math
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.embdedup import (
+        embdedup_batch,
         read_embdedup_flags,
-        run_embdedup_stream,
     )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import run_state_stream
+
+    def run_embdedup_stream(sdf, state, out):
+        run_state_stream(sdf, state, lambda b, i: embdedup_batch(b, state, out, i))
 
     def vec(seed: int, dim: int = 64) -> list:
         return [math.sin(seed * 97 + i * 13) for i in range(dim)]

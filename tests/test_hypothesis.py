@@ -1290,7 +1290,7 @@ def test_streaming_cohort_matches_batch_under_any_order(
 
     # batch expectation via the same derivation over ALL rows at once
     state = tempfile.mkdtemp(prefix="cohort_prop_all_") + "/s"
-    merge_cohort_batch(mkdf(data), state)
+    merge_cohort_batch(mkdf(data), state, 0)
     want = {
         (r.cohort_week, r.week_offset): (r.n_active, r.retention)
         for r in read_cohort_matrix(spark, state).collect()
@@ -1330,7 +1330,7 @@ def test_streaming_cohort_matches_batch_under_any_order(
     lo = 0
     for hi in bounds:
         if hi > lo:
-            merge_cohort_batch(mkdf(shuffled[lo:hi]), state2)
+            merge_cohort_batch(mkdf(shuffled[lo:hi]), state2, hi)
         lo = hi
     got = {
         (r.cohort_week, r.week_offset): (r.n_active, r.retention)
@@ -2612,19 +2612,21 @@ def test_upsert_sink_split_invariant_with_tombstones(spark, ops, cuts):
     bounds = sorted(c for c in cuts if c < len(rows)) + [len(rows)]
     lo = 0
     last_batch = None
+    bid = -1
     for hi in bounds:
         batch = rows[lo:hi]
         lo = hi
         if not batch:
             continue
         last_batch = batch
+        bid += 1
         upsert_batch(
-            spark.createDataFrame(batch, cols), state,
+            spark.createDataFrame(batch, cols), state, bid,
             keys=["k"], offset_col="off",
         )
-    # crash re-delivery of the LAST batch must be a no-op
+    # crash re-delivery of the LAST batch (same id) must be a no-op
     upsert_batch(
-        spark.createDataFrame(last_batch, cols), state,
+        spark.createDataFrame(last_batch, cols), state, bid,
         keys=["k"], offset_col="off",
     )
     got = {
@@ -3465,7 +3467,7 @@ def test_streaming_hll_split_invariant(spark, keys, cuts):
         lo = 0
         for hi in bounds:
             if hi > lo:
-                merge_hll_batch(mkdf(keys[lo:hi]), state, "k")
+                merge_hll_batch(mkdf(keys[lo:hi]), state, hi, "k")
                 lo = hi
         [s] = read_hll_estimate(spark, state).collect()
         [b] = SK.hll_estimate(mkdf(keys), "k").collect()
@@ -3499,7 +3501,7 @@ def test_streaming_cms_split_invariant(spark, keys, cuts):
         lo = 0
         for hi in bounds:
             if hi > lo:
-                merge_cms_batch(mkdf(keys[lo:hi]), state, "k")
+                merge_cms_batch(mkdf(keys[lo:hi]), state, hi, "k")
                 lo = hi
         cand = mkdf(sorted(set(keys)))
         topk = 1000  # all candidates: compare full estimate vectors

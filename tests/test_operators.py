@@ -14,6 +14,7 @@ from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.operators import 
     joins,
 )
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import (
+    _state_version,
     read_state,
     upsert_batch,
 )
@@ -114,7 +115,7 @@ def test_upsert_sink_delete_propagation(spark, tmp_path):
         [("1", "a", False, 0), ("2", "b", False, 1)],
         ["id", "v", "__deleted", "_offset"],
     )
-    upsert_batch(b1, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b1, state, 0, keys=["id"], offset_col="_offset")
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {
         ("1", "a"),
         ("2", "b"),
@@ -124,11 +125,11 @@ def test_upsert_sink_delete_propagation(spark, tmp_path):
         [("1", "a2", False, 2), ("2", "b", True, 3)],
         ["id", "v", "__deleted", "_offset"],
     )
-    upsert_batch(b2, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b2, state, 1, keys=["id"], offset_col="_offset")
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {("1", "a2")}
     # batch 3: stale re-delivery (offset 0) must not regress key 1
     b3 = spark.createDataFrame([("1", "a", False, 0)], ["id", "v", "__deleted", "_offset"])
-    upsert_batch(b3, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b3, state, 2, keys=["id"], offset_col="_offset")
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {("1", "a2")}
 
 
@@ -147,7 +148,7 @@ def test_upsert_crash_before_pointer_swap_then_retry(spark, tmp_path, monkeypatc
         [("1", "a", False, 0), ("2", "b", False, 1)],
         ["id", "v", "__deleted", "_offset"],
     )
-    upsert_batch(b1, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b1, state, 0, keys=["id"], offset_col="_offset")
     committed = {(r.id, r.v) for r in read_state(spark, state).collect()}
 
     b2 = spark.createDataFrame(
@@ -161,7 +162,7 @@ def test_upsert_crash_before_pointer_swap_then_retry(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(upsert.os, "replace", crash_replace)
     with pytest.raises(OSError, match="injected crash"):
-        upsert_batch(b2, state, keys=["id"], offset_col="_offset")
+        upsert_batch(b2, state, 1, keys=["id"], offset_col="_offset")
     monkeypatch.setattr(upsert.os, "replace", real_replace)
 
     # pointer untouched: readers still see the pre-crash state, even
@@ -170,7 +171,7 @@ def test_upsert_crash_before_pointer_swap_then_retry(spark, tmp_path, monkeypatc
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == committed
 
     # re-delivery of the failed batch overwrites the orphan and commits
-    upsert_batch(b2, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b2, state, 1, keys=["id"], offset_col="_offset")
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {
         ("1", "a2"),
         ("2", "b"),
@@ -179,9 +180,14 @@ def test_upsert_crash_before_pointer_swap_then_retry(spark, tmp_path, monkeypatc
 
 
 def test_upsert_rerun_same_batch_is_idempotent(spark, tmp_path):
-    """Replaying an already-committed batch (checkpoint lost, foreachBatch
-    re-run) must be a no-op on the state's contents: the merge is
-    deterministic in (prior, batch) and stored offsets never regress."""
+    """Replaying an already-committed batch must be a no-op on the
+    state's contents: re-delivered under its own id it overwrites its
+    own commit, and its content replayed under a later id (a transport
+    re-sending old records) merges to the same state because the merge
+    is deterministic in (prior, batch) and stored offsets never regress.
+    An id BELOW the committed pointer means the checkpoint was reset
+    next to a live state dir, and must fail loudly without touching the
+    state."""
     state = str(tmp_path / "state")
     b1 = spark.createDataFrame(
         [("1", "a", False, 0), ("2", "b", True, 1)],
@@ -191,12 +197,92 @@ def test_upsert_rerun_same_batch_is_idempotent(spark, tmp_path):
         [("1", "a2", False, 2), ("3", "c", False, 3)],
         ["id", "v", "__deleted", "_offset"],
     )
-    upsert_batch(b1, state, keys=["id"], offset_col="_offset")
-    upsert_batch(b2, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b1, state, 0, keys=["id"], offset_col="_offset")
+    upsert_batch(b2, state, 1, keys=["id"], offset_col="_offset")
     want = {(r.id, r.v) for r in read_state(spark, state).collect()}
-    for replay in (b2, b1):  # replay latest AND an older batch
-        upsert_batch(replay, state, keys=["id"], offset_col="_offset")
+    # re-deliver the latest batch, then replay it AND an older batch's
+    # content under the next ids
+    for bid, replay in ((1, b2), (2, b2), (3, b1)):
+        upsert_batch(replay, state, bid, keys=["id"], offset_col="_offset")
         assert {(r.id, r.v) for r in read_state(spark, state).collect()} == want
+    with pytest.raises(RuntimeError, match="below the committed version"):
+        upsert_batch(b1, state, 0, keys=["id"], offset_col="_offset")
+    assert _state_version(state) == 3
+    assert {(r.id, r.v) for r in read_state(spark, state).collect()} == want
+
+
+def test_fold_below_committed_version_raises_even_when_empty(spark, tmp_path):
+    """The checkpoint/state guard runs before any fast path: an EMPTY
+    batch below the pointer (the trailing no-data batch of a reset
+    checkpoint) raises through the plain merge, the transform sink's
+    raw-batch probe and a sketch fold alike, and no fold moves the
+    pointer."""
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_cms_batch,
+    )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import (
+        keyed_upsert_sink,
+    )
+
+    b = spark.createDataFrame(
+        [("1", "a", False, 0)], ["id", "v", "__deleted", "_offset"]
+    )
+    up, cms = str(tmp_path / "up"), str(tmp_path / "cms")
+    sink = keyed_upsert_sink(up, ["id"], "_offset", transform=lambda d: d)
+    sink(b, 0)
+    sink(b, 3)
+    merge_cms_batch(b, cms, 3, "id")
+    folds = [
+        (up, lambda d, i: upsert_batch(d, up, i, ["id"], "_offset")),
+        (up, sink),
+        (cms, lambda d, i: merge_cms_batch(d, cms, i, "id")),
+    ]
+    for state, fold in folds:
+        with pytest.raises(RuntimeError, match="below the committed version"):
+            fold(b.limit(0), 2)
+        assert _state_version(state) == 3
+
+
+def test_run_state_stream_resumes_and_rejects_a_reset_checkpoint(spark, tmp_path):
+    """The runner checkpoints at <state_dir>/_ckpt, so a second call
+    folds only the newly landed file under the next batch id; with the
+    trailing batch off it restores the session conf.  Deleting the
+    checkpoint next to the live state restarts batch ids at 0, and the
+    query fails instead of rewinding the state."""
+    import json
+    import shutil
+
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import (
+        keyed_upsert_sink,
+        run_state_stream,
+    )
+
+    src, state = tmp_path / "src", str(tmp_path / "state")
+    src.mkdir()
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, "true")
+    sink = keyed_upsert_sink(state, ["id"], "_offset", deleted_col=None)
+
+    def land_and_run(name, rows):
+        with open(src / name, "w") as fh:
+            fh.writelines(json.dumps(r) + "\n" for r in rows)
+        sdf = spark.readStream.schema("id string, v string, _offset long").json(
+            str(src)
+        )
+        run_state_stream(sdf, state, sink, trailing_batch=False)
+
+    land_and_run("a.jsonl", [{"id": "1", "v": "a", "_offset": 0}])
+    land_and_run("b.jsonl", [{"id": "1", "v": "b", "_offset": 1}])
+    assert os.path.isdir(os.path.join(state, "_ckpt"))
+    assert spark.conf.get(key, "true") == before
+    assert _state_version(state) == 1
+    assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {("1", "b")}
+
+    shutil.rmtree(os.path.join(state, "_ckpt"))
+    with pytest.raises(Exception, match="below the committed version"):
+        land_and_run("c.jsonl", [{"id": "2", "v": "c", "_offset": 2}])
+    assert spark.conf.get(key, "true") == before
+    assert _state_version(state) == 1
 
 
 def test_upsert_schema_evolution_widen(spark, tmp_path):
@@ -209,15 +295,15 @@ def test_upsert_schema_evolution_widen(spark, tmp_path):
         [("1", "a", False, 0), ("2", "b", False, 1)],
         ["id", "v", "__deleted", "_offset"],
     )
-    upsert_batch(b1, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b1, state, 0, keys=["id"], offset_col="_offset")
     b2 = spark.createDataFrame(
         [("2", "b2", "emea", False, 2), ("3", "c", "apac", False, 3)],
         ["id", "v", "region", "__deleted", "_offset"],
     )
     with pytest.raises(Exception):  # fixed-schema pipeline: loud failure
-        upsert_batch(b2, state, keys=["id"], offset_col="_offset")
+        upsert_batch(b2, state, 1, keys=["id"], offset_col="_offset")
     upsert_batch(
-        b2, state, keys=["id"], offset_col="_offset",
+        b2, state, 1, keys=["id"], offset_col="_offset",
         allow_schema_evolution=True,
     )
     got = {
@@ -227,21 +313,20 @@ def test_upsert_schema_evolution_widen(spark, tmp_path):
 
 
 def test_vacuum_keeps_reader_visible_version(spark, tmp_path):
-    """A reader that resolved the pointer just before new commits +
-    vacuum(keep=2) can still collect its DataFrame: retention never
-    drops the newest `keep` versions, so a one-behind reader's files
-    survive."""
+    """A reader that resolved the pointer just before a new commit (which
+    vacuums to the newest two versions) can still collect its
+    DataFrame: retention never drops the newest two versions, so a
+    one-behind reader's files survive."""
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
         upsert,
     )
 
     state = str(tmp_path / "state")
-    upsert.write_version(spark.range(3), state, retain=None)  # v=0
-    upsert.write_version(spark.range(4), state, retain=None)  # v=1
+    upsert.write_version(spark.range(3), state, 0)  # v=0
+    upsert.write_version(spark.range(4), state, 1)  # v=1
     reader = read_state(spark, state)  # resolves pointer -> v=1
-    upsert.write_version(spark.range(5), state, retain=None)  # v=2 current
-    dropped = upsert.vacuum_versions(state, keep=2)
-    assert dropped == [0]
+    upsert.write_version(spark.range(5), state, 2)  # v=2 current, vacuums
+    assert upsert._versions(state) == [1, 2]
     # in-flight reader on v=1 still works after vacuum
     assert reader.count() == 4
     assert upsert.read_state(spark, state).count() == 5
@@ -501,14 +586,16 @@ def test_vacuum_versions_keeps_pointer_and_newest(spark, tmp_path):
     )
 
     state = str(tmp_path / "state")
-    for i in range(5):
-        upsert.write_version(spark.range(i + 1), state, retain=None)
-    dropped = upsert.vacuum_versions(state, keep=2)
-    assert dropped == [0, 1, 2]
+    # batch ids with gaps (skipped empty batches commit nothing): the
+    # newest two versions by id survive, whatever their distance
+    for i, bid in enumerate((0, 2, 5, 6, 9)):
+        upsert.write_version(spark.range(i + 1), state, bid)
+    assert upsert._versions(state) == [6, 9]
     # current pointer still readable with full contents
+    assert upsert._state_version(state) == 9
     assert upsert.read_state(spark, state).count() == 5
     # idempotent
-    assert upsert.vacuum_versions(state, keep=2) == []
+    assert upsert.vacuum_versions(state) == []
 
 
 def test_write_zordered_files_cover_disjoint_ranges(spark, tmp_path):
@@ -1297,7 +1384,7 @@ def test_keyed_upsert_sink_skips_empty_batch_without_transform_run(
         [("1", "a2", False, 2)], ["id", "v", "__deleted", "_offset"]
     )
     sink(b2, 2)
-    assert calls == [1, 1] and _state_version(state) == 1
+    assert calls == [1, 1] and _state_version(state) == 2
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {
         ("1", "a2")
     }
@@ -1311,12 +1398,12 @@ def test_upsert_batch_skip_empty_probe_still_merges(spark, tmp_path):
     b1 = spark.createDataFrame(
         [("1", "a", False, 0)], ["id", "v", "__deleted", "_offset"]
     )
-    upsert_batch(b1, state, keys=["id"], offset_col="_offset")
+    upsert_batch(b1, state, 0, keys=["id"], offset_col="_offset")
     b2 = spark.createDataFrame(
         [("1", "b", False, 1)], ["id", "v", "__deleted", "_offset"]
     )
     upsert_batch(
-        b2, state, keys=["id"], offset_col="_offset", skip_empty_probe=True
+        b2, state, 1, keys=["id"], offset_col="_offset", skip_empty_probe=True
     )
     assert {(r.id, r.v) for r in read_state(spark, state).collect()} == {
         ("1", "b")

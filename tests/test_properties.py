@@ -53,10 +53,10 @@ def test_upsert_batch_split_invariance(spark, tmp_path):
 
     def run(splits, name):
         state = str(tmp_path / name)
-        for lo, hi in splits:
+        for bid, (lo, hi) in enumerate(splits):
             upsert_batch(
                 spark.createDataFrame(rows[lo:hi], cols),
-                state, keys=["k"], offset_col="off",
+                state, bid, keys=["k"], offset_col="off",
             )
         return {tuple(r) for r in read_state(spark, state).collect()}
 

@@ -49,9 +49,10 @@ def test_streaming_hll_two_rounds_match_batch(spark, tmp_path):
     import json
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_hll_batch,
         read_hll_estimate,
-        run_hll_stream,
     )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import run_state_stream
 
     rows1 = [{"g": "a", "k": f"x{i}"} for i in range(400)]
     rows2 = [{"g": "a", "k": f"x{i}"} for i in range(200, 600)]  # overlap
@@ -64,7 +65,10 @@ def test_streaming_hll_two_rounds_match_batch(spark, tmp_path):
             for r in rows:
                 fh.write(json.dumps(r) + "\n")
         sdf = spark.readStream.schema(schema).json(str(src))
-        run_hll_stream(sdf, str(tmp_path / "state"), "k", ["g"])
+        state = str(tmp_path / "state")
+        run_state_stream(
+            sdf, state, lambda b, i: merge_hll_batch(b, state, i, "k", ["g"])
+        )
 
     _ingest(rows1, "r1.jsonl")
     _ingest(rows2, "r2.jsonl")
@@ -102,9 +106,10 @@ def test_streaming_bars_two_rounds_match_batch(spark, tmp_path):
         ohlc_bars,
     )
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.bars import (
+        merge_bars_batch,
         read_bars,
-        run_bars_stream,
     )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import run_state_stream
 
     # round 2 delivers the EARLIEST offset of day 1 (id 0, value 99):
     # the merged open must come from round 2, not arrival order
@@ -129,8 +134,11 @@ def test_streaming_bars_two_rounds_match_batch(spark, tmp_path):
             .json(str(src))
             .withColumn("ts", F.to_timestamp("ts"))
         )
-        run_bars_stream(
-            sdf, str(tmp_path / "state"), ["k"], "ts", "v", "id", "day"
+        state = str(tmp_path / "state")
+        run_state_stream(
+            sdf,
+            state,
+            lambda b, i: merge_bars_batch(b, state, i, ["k"], "ts", "v", "id", "day"),
         )
 
     _ingest(rows1, "r1.jsonl")
@@ -164,9 +172,10 @@ def test_streaming_hist_two_rounds_match_batch(spark, tmp_path):
     import json
 
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_hist_batch,
         read_hist_quantiles,
-        run_hist_stream,
     )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import run_state_stream
 
     rows1 = [{"g": "a", "v": float(i % 40)} for i in range(300)]
     rows2 = [{"g": "a", "v": float((i * 7) % 40)} for i in range(300)]
@@ -179,7 +188,10 @@ def test_streaming_hist_two_rounds_match_batch(spark, tmp_path):
             for r in rows:
                 fh.write(json.dumps(r) + "\n")
         sdf = spark.readStream.schema(schema).json(str(src))
-        run_hist_stream(sdf, str(tmp_path / "state"), "v", ["g"])
+        state = str(tmp_path / "state")
+        run_state_stream(
+            sdf, state, lambda b, i: merge_hist_batch(b, state, i, "v", ["g"])
+        )
 
     _ingest(rows1, "r1.jsonl")
     _ingest(rows2, "r2.jsonl")
@@ -197,6 +209,43 @@ def test_streaming_hist_two_rounds_match_batch(spark, tmp_path):
         batch.n, batch.p50_est, batch.p90_est, batch.p99_est
     )
     assert streamed.n == 600
+
+
+def test_cms_and_hist_redelivered_batch_is_counted_once(spark, tmp_path):
+    """foreachBatch is at-least-once: a crash after the pointer swap but
+    before the checkpoint commit re-delivers the committed batch under
+    the same id.  The additive CMS and histogram folds must overwrite
+    their own commit, leaving exactly the clean run's state rather than
+    counting the batch twice."""
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sketches import (
+        merge_cms_batch,
+        merge_hist_batch,
+    )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import (
+        read_state,
+    )
+
+    b0 = spark.createDataFrame(
+        [(f"k{i % 5}", float(i % 40)) for i in range(60)], ["k", "v"]
+    )
+    b1 = spark.createDataFrame(
+        [(f"k{i % 3}", float(i % 17)) for i in range(40)], ["k", "v"]
+    )
+    folds = {
+        "cms": lambda b, d, i: merge_cms_batch(b, d, i, "k"),
+        "hist": lambda b, d, i: merge_hist_batch(b, d, i, "v"),
+    }
+    for name, fold in folds.items():
+        clean, replayed = str(tmp_path / f"{name}_clean"), str(tmp_path / name)
+        for d in (clean, replayed):
+            fold(b0, d, 0)
+            fold(b1, d, 1)
+        fold(b1, replayed, 1)  # re-delivery of the committed batch
+        want = sorted(map(tuple, read_state(spark, clean).collect()))
+        got = sorted(map(tuple, read_state(spark, replayed).collect()))
+        assert got == want, name
+    # the re-delivered histogram still holds each of the 100 rows once
+    assert sum(r.c for r in read_state(spark, str(tmp_path / "hist")).collect()) == 100
 
 
 def test_drift_state_batch_split_invariant(spark, tmp_path):
@@ -229,8 +278,8 @@ def test_drift_state_batch_split_invariant(spark, tmp_path):
     b1 = df.filter(F.second("ts") % 2 == 0)
     b2 = df.filter(F.second("ts") % 2 == 1)
     state = str(tmp_path / "state")
-    merge_drift_batch(b1, state, mid.m)
-    merge_drift_batch(b2, state, mid.m)
+    merge_drift_batch(b1, state, 0, mid.m)
+    merge_drift_batch(b2, state, 1, mid.m)
     streamed = {r.event_type: r for r in read_psi(spark, state).collect()}
     batch = {r.event_type: r for r in profiling.psi_drift(df).collect()}
     for g in ("shift", "flat"):
@@ -257,13 +306,13 @@ def test_reservoir_state_batch_split_invariant_and_idempotent(spark, tmp_path):
     b1 = df.filter(F.col("doc_id") % 3 != 0)
     b2 = df.filter(F.col("doc_id") % 3 == 0)
     state = str(tmp_path / "state")
-    merge_reservoir_batch(b1, state, "w", k=40)
-    merge_reservoir_batch(b2, state, "w", k=40)
+    merge_reservoir_batch(b1, state, 0, "w", k=40)
+    merge_reservoir_batch(b2, state, 1, "w", k=40)
     got = sorted(r.doc_id for r in read_reservoir(spark, state).collect())
     want = sorted(r.doc_id for r in es_topk_sample(df, "w", k=40).collect())
     assert got == want and len(got) == 40
-    # re-deliver b2: state must not change
-    merge_reservoir_batch(b2, state, "w", k=40)
+    # re-deliver b2's rows as a new batch: state must not change
+    merge_reservoir_batch(b2, state, 2, "w", k=40)
     again = sorted(r.doc_id for r in read_reservoir(spark, state).collect())
     assert again == want
 

@@ -11,7 +11,9 @@ surface onto Structured Streaming:
                 plus the Kafka option surface (S5/S7).
   upsert.py   — the keyed-upsert sink (S9/E2): a versioned parquet state
                 table maintained by ``foreachBatch`` MERGE with delete
-                propagation, the ES-connector analogue.
+                propagation, the ES-connector analogue; plus the batch-id
+                commit protocol and the ``run_state_stream`` runner every
+                state sink in this package shares.
   pipeline.py — the continuous queries themselves: streaming
                 ``latest_by_offset`` in update mode (A2/A3/E1), the
                 watermarked stream-stream interval join (J2), and the
@@ -21,7 +23,12 @@ surface onto Structured Streaming:
 
 from .sources import file_stream, kafka_source_options  # noqa: F401
 from .sinks import materialize_to_topic  # noqa: F401
-from .upsert import read_state, upsert_batch, keyed_upsert_sink  # noqa: F401
+from .upsert import (  # noqa: F401
+    keyed_upsert_sink,
+    read_state,
+    run_state_stream,
+    upsert_batch,
+)
 from .pipeline import (  # noqa: F401
     streaming_latest_by_offset,
     watermarked_interval_join,

@@ -10,23 +10,24 @@ close_off, n_ticks) and two partial bars combine as
     high/low = max/min,  n_ticks = sum
 
 min_by/max_by/min/max are associative+commutative and n_ticks' sum is
-batch-split invariant under the foreachBatch checkpoint, so ANY
-micro-batch partitioning of the stream folds to the same bars the
-batch aggregate computes — which is exactly what the shared DuckDB
-oracle checks. State is O(keys × buckets), independent of tick volume:
-the A3 materialized-table pattern applied to a time-series rollup.
+batch-split invariant, so ANY micro-batch partitioning of the stream
+folds to the same bars the batch aggregate computes — which is exactly what the shared DuckDB
+oracle checks.  The n_ticks sum is not idempotent: exactly-once under
+re-delivery comes from the batch-id commit protocol in
+streaming/upsert.py.  State is O(keys × buckets), independent of tick
+volume: the A3 materialized-table pattern applied to a time-series
+rollup.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import ohlc_bars
-from .upsert import read_state, write_version
+from .upsert import read_prior, read_state, write_version
 
 
 def _bar_state(
@@ -65,42 +66,17 @@ def _merge(state: DataFrame, keys: Sequence[str]) -> DataFrame:
 def merge_bars_batch(
     batch_df: DataFrame,
     state_dir: str,
-    key_cols: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    offset_col: str,
-    bucket: str,
-    retain: int | None = 2,
-) -> None:
-    part = _bar_state(batch_df, key_cols, ts_col, value_col, offset_col, bucket)
-    prior = read_state(batch_df.sparkSession, state_dir)
-    merged = part if prior is None else prior.unionByName(part)
-    write_version(_merge(merged, key_cols), state_dir, retain=retain)
-
-
-def run_bars_stream(
-    stream_df: DataFrame,
-    state_dir: str,
+    batch_id: int,
     key_cols: Sequence[str],
     ts_col: str = "ts",
     value_col: str = "value",
     offset_col: str = "event_id",
     bucket: str = "day",
 ) -> None:
-    """Maintain the bar state as a StreamingQuery (availableNow)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_bars_batch(
-            batch_df, state_dir, key_cols, ts_col, value_col, offset_col, bucket
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    part = _bar_state(batch_df, key_cols, ts_col, value_col, offset_col, bucket)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
+    merged = part if prior is None else prior.unionByName(part)
+    write_version(_merge(merged, key_cols), state_dir, batch_id)
 
 
 def read_bars(spark: SparkSession, state_dir: str, key_cols: Sequence[str]) -> DataFrame:
@@ -110,4 +86,4 @@ def read_bars(spark: SparkSession, state_dir: str, key_cols: Sequence[str]) -> D
     )
 
 
-__all__ = ["merge_bars_batch", "run_bars_stream", "read_bars", "ohlc_bars"]
+__all__ = ["merge_bars_batch", "read_bars", "ohlc_bars"]

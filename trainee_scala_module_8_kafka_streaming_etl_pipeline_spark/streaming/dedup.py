@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
-from .upsert import read_state, upsert_batch
+from .upsert import read_prior, upsert_batch
 
 _OUT_SCHEMA = "doc_id bigint, dup_of bigint, jaccard double"
 
@@ -115,7 +115,7 @@ def dedup_batch(
     perdoc = D.minhash_perdoc(batch_df, id_col, text_col).cache()
     perdoc.count()
 
-    prior = read_state(spark, state_dir)
+    prior = read_prior(spark, state_dir, batch_id)
     if prior is not None:
         # state rows carry the merge bookkeeping column; align to the
         # per-doc schema before unioning
@@ -148,36 +148,12 @@ def dedup_batch(
     upsert_batch(
         perdoc.withColumn("_offset", F.col("doc_id")),
         state_dir,
+        batch_id,
         keys=["doc_id"],
         offset_col="_offset",
         deleted_col=None,
     )
     perdoc.unpersist()
-
-
-def run_minhash_dedup_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = D.JACCARD_THRESHOLD,
-) -> None:
-    """Run the incremental dedup as a real StreamingQuery (availableNow)
-    with checkpointed source offsets next to the state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch(
-            batch_df, state_dir, out_dir, batch_id, id_col, text_col, threshold
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def read_flags(spark: SparkSession, out_dir: str) -> DataFrame:

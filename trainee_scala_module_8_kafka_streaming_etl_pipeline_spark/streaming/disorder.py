@@ -12,19 +12,16 @@ transition/interarrival states solve with segment endpoints).
 Valid under the arrival-order contract (micro-batches arrive in offset
 order — the audit is BY DEFINITION about arrival order, so this is not
 an extra assumption but the quantity being measured).  Tallies
-sum-merge, so the commit protocol is version-per-batch
-(streaming/transitions.py) for exactly-once counting.
+sum-merge, so exactly-once counting relies on the batch-id commit
+protocol (streaming/upsert.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_prior, read_state, write_version
 
 
 def _batch_audit(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
@@ -72,31 +69,13 @@ def _batch_audit(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
 def merge_disorder_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
-    prior = (
-        _read_version(spark, state_dir, max(prior_vs)) if prior_vs else None
-    )
-    _commit(_batch_audit(batch_df, prior), state_dir, batch_id)
-
-
-def run_disorder_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_disorder_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
+    write_version(_batch_audit(batch_df, prior), state_dir, batch_id)
 
 
 def read_disorder(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current audit in the batch query's output shape."""
-    v = _state_version(state_dir)
-    st = _read_version(spark, state_dir, v)
-    return st.select(
+    return read_state(spark, state_dir).select(
         "event_type",
         F.col("n").alias("n_events"),
         "n_late",
@@ -108,4 +87,4 @@ def read_disorder(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-__all__ = ["merge_disorder_batch", "run_disorder_stream", "read_disorder"]
+__all__ = ["merge_disorder_batch", "read_disorder"]

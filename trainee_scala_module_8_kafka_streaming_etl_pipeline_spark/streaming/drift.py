@@ -9,33 +9,31 @@ bin) counts; PSI against the reference side is readable at any moment.
 The state is a plain additive histogram — sum-merge is associative and
 commutative, so the maintained counts are batch-split invariant and
 the batch PSI SQL over the same rows is the exact oracle (same
-contract as the CMS/histogram sketches in streaming/sketches.py; the
-exactly-once boundary comes from the checkpointed source offsets, not
-from the merge).  State size is O(groups x bins x 2) forever,
+contract as the CMS/histogram sketches in streaming/sketches.py;
+exactly-once under re-delivery comes from the batch-id commit protocol
+in streaming/upsert.py, not from the merge).  State size is O(groups x bins x 2) forever,
 regardless of stream volume.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.profiling import assign_drift_bins, psi_from_counts
-from .upsert import read_state, write_version
+from .upsert import read_prior, read_state, write_version
 
 
 def merge_drift_batch(
     batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
     mid_us: int,
     group_col: str = "event_type",
     value_col: str = "value",
     ts_col: str = "ts",
     n_bins: int = 20,
     bin_width: float = 25.0,
-    retain: int | None = 2,
 ) -> None:
     """One histogram merge: state' = sum-merge(state, bins(batch))."""
     binned = assign_drift_bins(
@@ -44,38 +42,10 @@ def merge_drift_batch(
     counts = binned.groupBy("grp", "period", "bin").agg(
         F.count(F.lit(1)).alias("c")
     )
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     merged = counts if prior is None else prior.unionByName(counts)
     folded = merged.groupBy("grp", "period", "bin").agg(F.sum("c").alias("c"))
-    write_version(folded, state_dir, retain=retain)
-
-
-def run_drift_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    mid_us: int,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    n_bins: int = 20,
-    bin_width: float = 25.0,
-) -> None:
-    """Maintain the drift histogram as a real StreamingQuery
-    (availableNow) with checkpointed source offsets next to the state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_drift_batch(
-            batch_df, state_dir, mid_us, group_col, value_col, ts_col,
-            n_bins, bin_width,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_version(folded, state_dir, batch_id)
 
 
 def read_psi(

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
-from .upsert import read_state, upsert_batch
+from .upsert import read_prior, upsert_batch
 
 _OUT_SCHEMA = "vec_id bigint, dup_of bigint, cos double"
 
@@ -64,7 +64,7 @@ def embdedup_batch(
     buckets = S._bucketize_pandas(batch_df, tables, id_col, vec_col).cache()
     buckets.count()
 
-    prior = read_state(spark, state_dir)
+    prior = read_prior(spark, state_dir, batch_id)
     if prior is not None:
         prior = prior.select(*buckets.columns)
     earlier = prior.unionByName(buckets) if prior is not None else buckets
@@ -102,33 +102,12 @@ def embdedup_batch(
     upsert_batch(
         buckets.withColumn("_offset", F.col(id_col)),
         state_dir,
+        batch_id,
         keys=[id_col, "table_idx"],
         offset_col="_offset",
         deleted_col=None,
     )
     buckets.unpersist()
-
-
-def run_embdedup_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-) -> None:
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        embdedup_batch(
-            batch_df, state_dir, out_dir, batch_id, id_col, vec_col, threshold
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def read_embdedup_flags(spark: SparkSession, out_dir: str) -> DataFrame:

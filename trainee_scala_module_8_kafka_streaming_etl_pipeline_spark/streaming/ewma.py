@@ -7,8 +7,9 @@ last L events — so that ring of rows IS the state: O(keys x L) forever.
 Each micro-batch unions into the state and keeps the top-L rows per key
 by (ts, offset); like the weighted-reservoir's min-k merge, top-L
 selection is associative, commutative, AND idempotent, so the fold is
-batch-split invariant and re-delivery tolerant without any commit
-protocol — a replayed batch cannot change the kept set.
+batch-split invariant and re-delivery tolerant by itself — a replayed
+batch cannot change the kept set (it still commits through the shared
+batch-id protocol in streaming/upsert.py).
 
 Read path: run the SAME batch ewma operator over the tiny state frame
 and keep each key's latest row — definitionally equal to the batch
@@ -18,14 +19,13 @@ qualified to the latest row per key) checks.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import ewma
-from .upsert import read_state, write_version
+from .upsert import read_prior, read_state, write_version
 
 EWMA_LAGS = 8
 
@@ -51,40 +51,17 @@ def _top_l(
 def merge_ewma_batch(
     batch_df: DataFrame,
     state_dir: str,
-    key_cols: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    offset_col: str,
-    retain: int | None = 2,
-) -> None:
-    cols = [*key_cols, ts_col, value_col, offset_col]
-    part = _top_l(batch_df.select(*cols), key_cols, ts_col, offset_col)
-    prior = read_state(batch_df.sparkSession, state_dir)
-    merged = part if prior is None else prior.unionByName(part)
-    write_version(
-        _top_l(merged, key_cols, ts_col, offset_col), state_dir, retain=retain
-    )
-
-
-def run_ewma_stream(
-    stream_df: DataFrame,
-    state_dir: str,
+    batch_id: int,
     key_cols: Sequence[str],
     ts_col: str = "ts",
     value_col: str = "value",
     offset_col: str = "event_id",
 ) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_ewma_batch(
-                b, state_dir, key_cols, ts_col, value_col, offset_col
-            )
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    cols = [*key_cols, ts_col, value_col, offset_col]
+    part = _top_l(batch_df.select(*cols), key_cols, ts_col, offset_col)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
+    merged = part if prior is None else prior.unionByName(part)
+    write_version(_top_l(merged, key_cols, ts_col, offset_col), state_dir, batch_id)
 
 
 def read_ewma(
@@ -111,4 +88,4 @@ def read_ewma(
     )
 
 
-__all__ = ["merge_ewma_batch", "run_ewma_stream", "read_ewma"]
+__all__ = ["merge_ewma_batch", "read_ewma"]

@@ -24,13 +24,10 @@ state ∪ batch-partial — no row data to the driver, no sequential scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_prior, read_state, write_version
 
 
 def _batch_partial(batch_df: DataFrame) -> DataFrame:
@@ -91,30 +88,16 @@ def _merge(prior: DataFrame, part: DataFrame) -> DataFrame:
 def merge_interarrival_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     part = _batch_partial(batch_df)
-    if prior_vs:
-        part = _merge(_read_version(spark, state_dir, max(prior_vs)), part)
-    _commit(part, state_dir, batch_id)
-
-
-def run_interarrival_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_interarrival_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    if prior is not None:
+        part = _merge(prior, part)
+    write_version(part, state_dir, batch_id)
 
 
 def read_interarrival(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current stats in the batch query's output shape."""
-    v = _state_version(state_dir)
-    return _read_version(spark, state_dir, v).select(
+    return read_state(spark, state_dir).select(
         "user_id",
         "n_gaps",
         F.col("min_gap_us").cast("long").alias("min_gap_us"),
@@ -125,6 +108,5 @@ def read_interarrival(spark: SparkSession, state_dir: str) -> DataFrame:
 
 __all__ = [
     "merge_interarrival_batch",
-    "run_interarrival_stream",
     "read_interarrival",
 ]

@@ -44,7 +44,7 @@ from pyspark.sql.types import (
 
 from ..operators.joins import enrich
 from .sources import file_stream
-from .upsert import keyed_upsert_sink, read_state
+from .upsert import keyed_upsert_sink, read_state, run_state_stream
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss"  # reference timestamp_format (README.md:413-414)
 
@@ -215,11 +215,18 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     increment files reproduces the reference's live-update demo
     (README.md:654-679: 5 docs, then 6).
     """
-    ckpt = os.path.join(work_dir, "checkpoints")
     state = os.path.join(work_dir, "state")
     customers_state = os.path.join(state, "customers_by_key")
     shipped_state = os.path.join(state, "shipped_orders")
 
+    # --- query 1: customers CDC -> streaming latest_by_offset table (A2/A3)
+    customers = file_stream(
+        spark, os.path.join(src_dir, "customers"), CUSTOMERS_SCHEMA, fmt="json"
+    )
+    compacted = streaming_latest_by_offset(
+        customers, keys=["id"], offset_col="_offset",
+        value_cols=["name", "age", "__deleted"],
+    )
     # Query 1 is no-data-batch-neutral (round 11): a watermark-free
     # update-mode aggregation — with no watermark there is nothing for
     # a trailing batch to advance or flush, within a run or across
@@ -232,31 +239,13 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     # admitting late rows canonical semantics would drop.  (The
     # one-shot q_streaming_interval_join entry still skips it safely —
     # single availableNow run, no cross-round state.)
-    _ndkey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    _nd_old = spark.conf.get(_ndkey, "true")
-
-    # --- query 1: customers CDC -> streaming latest_by_offset table (A2/A3)
-    customers = file_stream(
-        spark, os.path.join(src_dir, "customers"), CUSTOMERS_SCHEMA, fmt="json"
+    run_state_stream(
+        compacted,
+        customers_state,
+        keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset"),
+        output_mode="update",
+        trailing_batch=False,
     )
-    compacted = streaming_latest_by_offset(
-        customers, keys=["id"], offset_col="_offset",
-        value_cols=["name", "age", "__deleted"],
-    )
-    spark.conf.set(_ndkey, "false")
-    try:
-        q1 = (
-            compacted.writeStream.outputMode("update")
-            .foreachBatch(
-                keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
-            )
-            .option("checkpointLocation", os.path.join(ckpt, "customers"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q1.awaitTermination()
-    finally:
-        spark.conf.set(_ndkey, _nd_old)
 
     # --- query 2: orders x shipments watermarked interval join (J2) with
     # foreachBatch temporal enrichment (J1) + keyed upsert (S9/E2)
@@ -309,21 +298,16 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
             batch_df, dim, on=F.col("customer_id") == F.col("id"), how="left"
         ).drop("id")
 
-    q2 = (
-        shipped.writeStream.outputMode("append")
-        .foreachBatch(
-            keyed_upsert_sink(
-                shipped_state,
-                keys=["order_id"],
-                offset_col="_offset",
-                transform=_enrich_with_customer_state,
-            )
-        )
-        .option("checkpointLocation", os.path.join(ckpt, "shipped"))
-        .trigger(availableNow=True)
-        .start()
+    run_state_stream(
+        shipped,
+        shipped_state,
+        keyed_upsert_sink(
+            shipped_state,
+            keys=["order_id"],
+            offset_col="_offset",
+            transform=_enrich_with_customer_state,
+        ),
     )
-    q2.awaitTermination()
 
     out = read_state(spark, shipped_state)
     assert out is not None

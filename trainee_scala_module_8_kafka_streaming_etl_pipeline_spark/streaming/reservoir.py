@@ -16,27 +16,26 @@ Re-delivery of a batch is additionally harmless here: the replayed
 rows carry byte-identical deterministic keys, and the merge dedups on
 the row id before the k-limit, so a replay cannot crowd a distinct row
 out of the sample — stronger than the CMS/histogram sum merges, whose
-exactly-once depends entirely on the checkpoint.
+exactly-once depends entirely on the batch-id commit protocol
+(streaming/upsert.py).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import es_key
-from .upsert import read_state, write_version
+from .upsert import read_prior, read_state, write_version
 
 
 def merge_reservoir_batch(
     batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
     weight_col: str,
     k: int = 100,
     id_col: str = "doc_id",
-    retain: int | None = 2,
 ) -> None:
     """One reservoir merge: state' = min-k(state ∪ keyed(batch))."""
     keyed = (
@@ -44,7 +43,7 @@ def merge_reservoir_batch(
         .select(id_col, weight_col)
         .withColumn("samp_key", es_key(weight_col, id_col))
     )
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     merged = keyed if prior is None else prior.unionByName(keyed)
     # dropDuplicates on the id makes re-delivery idempotent: a replayed
     # row is byte-identical (deterministic key), so the dedup collapses
@@ -53,30 +52,8 @@ def merge_reservoir_batch(
     write_version(
         merged.dropDuplicates([id_col]).orderBy("samp_key", id_col).limit(k),
         state_dir,
-        retain=retain,
+        batch_id,
     )
-
-
-def run_reservoir_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    weight_col: str,
-    k: int = 100,
-    id_col: str = "doc_id",
-) -> None:
-    """Maintain the weighted reservoir as a real StreamingQuery
-    (availableNow) with checkpointed source offsets next to the state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_reservoir_batch(batch_df, state_dir, weight_col, k, id_col)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def read_reservoir(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -14,19 +14,16 @@ the untouched closed rows through unchanged.
 
 Correct under the ordered-log arrival contract (a key's changes arrive
 in event-time order — /root/reference/README.md:436); commit protocol
-is version-per-batch (streaming/transitions.py) so crash replay
-deterministically overwrites.
+is the batch-id one every state sink shares (streaming/upsert.py), so
+crash replay deterministically overwrites.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_prior, read_state, write_version
 
 _COLS = ["user_id", "event_id", "value", "valid_from", "valid_to", "is_current"]
 
@@ -48,15 +45,13 @@ def _chain(rows: DataFrame) -> DataFrame:
 def merge_scd2_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
     changes = batch_df.select(
         "user_id", "event_id", "value", F.col("ts").alias("valid_from")
     )
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
-    if not prior_vs:
-        _commit(_chain(changes), state_dir, batch_id)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
+    if prior is None:
+        write_version(_chain(changes), state_dir, batch_id)
         return
-    prior = _read_version(spark, state_dir, max(prior_vs))
     affected = changes.select("user_id").distinct()
     # closed rows and unaffected keys pass through untouched; only the
     # affected keys' open rows re-enter the window with the batch
@@ -72,24 +67,13 @@ def merge_scd2_batch(
         touched_open.select("user_id", "event_id", "value", "valid_from")
         .unionByName(changes)
     )
-    _commit(untouched.unionByName(rechained).select(*_COLS), state_dir, batch_id)
-
-
-def run_scd2_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_scd2_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    write_version(
+        untouched.unionByName(rechained).select(*_COLS), state_dir, batch_id
     )
-    q.awaitTermination()
 
 
 def read_scd2(spark: SparkSession, state_dir: str) -> DataFrame:
-    v = _state_version(state_dir)
-    return _read_version(spark, state_dir, v).select(*_COLS)
+    return read_state(spark, state_dir).select(*_COLS)
 
 
-__all__ = ["merge_scd2_batch", "run_scd2_stream", "read_scd2"]
+__all__ = ["merge_scd2_batch", "read_scd2"]

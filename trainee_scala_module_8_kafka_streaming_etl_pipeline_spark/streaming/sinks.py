@@ -22,7 +22,6 @@ def topn_sink(
     order_col: str,
     n: int,
     tiebreak_cols: Sequence[str] = (),
-    retain: int | None = 2,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function maintaining a global top-n leaderboard
     across micro-batches.
@@ -37,18 +36,15 @@ def topn_sink(
     size O(n) regardless of stream length.  Ties are broken by
     ``tiebreak_cols`` ascending so re-delivery is idempotent.
     """
-    from .upsert import read_state, write_version
+    from .upsert import read_prior, write_version
 
     order = [F.desc(order_col), *[F.asc(c) for c in tiebreak_cols]]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         local = batch_df.orderBy(*order).limit(n)
-        prior = read_state(spark, state_dir)
+        prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
         merged = local if prior is None else prior.unionByName(local)
-        write_version(
-            merged.orderBy(*order).limit(n), state_dir, retain=retain
-        )
+        write_version(merged.orderBy(*order).limit(n), state_dir, batch_id)
 
     return _sink
 

@@ -16,54 +16,31 @@ simply the batch HLL query over the same rows.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketches as SK
-from .upsert import read_state, write_version
+from .upsert import read_prior, read_state, write_version
 
 
 def merge_hll_batch(
     batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
     key_col: str,
     group_cols: Sequence[str] = (),
     m: int = SK.HLL_M,
-    retain: int | None = 2,
 ) -> None:
     """One register merge: state' = max-merge(state, registers(batch))."""
     regs = SK.hll_registers(batch_df, key_col, group_cols, m)
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     merged = regs if prior is None else prior.unionByName(regs)
     folded = merged.groupBy(*group_cols, "bucket").agg(
         F.max("v_max").alias("v_max")
     )
-    write_version(folded, state_dir, retain=retain)
-
-
-def run_hll_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    key_col: str,
-    group_cols: Sequence[str] = (),
-    m: int = SK.HLL_M,
-) -> None:
-    """Maintain streaming HLL registers as a real StreamingQuery
-    (availableNow) with checkpointed source offsets next to the state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hll_batch(batch_df, state_dir, key_col, group_cols, m)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_version(folded, state_dir, batch_id)
 
 
 def read_hll_estimate(
@@ -80,44 +57,24 @@ def read_hll_estimate(
 def merge_cms_batch(
     batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
     key_col: str,
     d: int = SK.CMS_D,
     w: int = SK.CMS_W,
-    retain: int | None = 2,
 ) -> None:
     """One count-min merge: state' = cellwise-sum(state, cells(batch)).
 
     Unlike the HLL max, the CMS merge is additive — still associative
-    and commutative (batch-split invariant), but NOT idempotent, so the
-    exactly-once batch boundary comes from the streaming checkpoint
-    rather than the merge itself (replaying a committed batch would
-    double-count; the foreachBatch checkpoint prevents exactly that)."""
+    and commutative (batch-split invariant), but NOT idempotent, so
+    exactly-once comes from the batch-id commit protocol
+    (streaming/upsert.py), not the merge itself: a re-delivered batch
+    folds into the version below its own id and overwrites its own
+    commit instead of counting twice."""
     cells = SK.cms_cells(batch_df, key_col, d, w)
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     merged = cells if prior is None else prior.unionByName(cells)
     folded = merged.groupBy("i", "col").agg(F.sum("cnt").alias("cnt"))
-    write_version(folded, state_dir, retain=retain)
-
-
-def run_cms_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    key_col: str,
-    d: int = SK.CMS_D,
-    w: int = SK.CMS_W,
-) -> None:
-    """Maintain streaming CMS cells as a StreamingQuery (availableNow)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_cms_batch(batch_df, state_dir, key_col, d, w)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_version(folded, state_dir, batch_id)
 
 
 def read_cms_topk(
@@ -137,43 +94,21 @@ def read_cms_topk(
 def merge_hist_batch(
     batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
     value_col: str,
     group_cols: Sequence[str] = (),
     width: float = SK.HIST_BIN_WIDTH,
-    retain: int | None = 2,
 ) -> None:
     """One histogram merge: state' = sum-merge(state, bins(batch)).
     Sum is associative/commutative, so the maintained state is
-    batch-split invariant (same caveat as CMS: idempotence under
-    re-delivery comes from the checkpointed source offsets, not the
-    merge itself)."""
+    batch-split invariant (same caveat as CMS: exactly-once under
+    re-delivery comes from the batch-id commit protocol, not the merge
+    itself)."""
     bins = SK.hist_bins(batch_df, value_col, group_cols, width)
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     merged = bins if prior is None else prior.unionByName(bins)
     folded = merged.groupBy(*group_cols, "bin").agg(F.sum("c").alias("c"))
-    write_version(folded, state_dir, retain=retain)
-
-
-def run_hist_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    value_col: str,
-    group_cols: Sequence[str] = (),
-    width: float = SK.HIST_BIN_WIDTH,
-) -> None:
-    """Maintain the streaming histogram sketch as a StreamingQuery
-    (availableNow) with checkpointed offsets next to the state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hist_batch(batch_df, state_dir, value_col, group_cols, width)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_version(folded, state_dir, batch_id)
 
 
 def read_hist_quantiles(

@@ -21,16 +21,12 @@ volume tracks batch size, not total key count.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .upsert import read_state as read_versioned
-from .upsert import upsert_batch
 
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_cents bigint, "
@@ -87,7 +83,10 @@ def _update_counter(
 def stateful_counter(stream_df: DataFrame) -> DataFrame:
     """Per-user running aggregate as an arbitrary-stateful operator.
 
-    Input columns: user_id, event_id, event_type, value.
+    Input columns: user_id, event_id, event_type, value.  Its update
+    stream is a changelog, so it materializes into a queryable table
+    through the keyed upsert sink on ``last_offset`` (run in update
+    mode by ``run_state_stream``).
     """
     return stream_df.groupBy("user_id").applyInPandasWithState(
         _update_counter,
@@ -96,33 +95,3 @@ def stateful_counter(stream_df: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_stateful_counter(stream_df: DataFrame, out_dir: str) -> None:
-    """Drive the stateful operator and materialize its update stream
-    into a queryable table (latest emitted row per key, by offset) —
-    update-mode emissions are a changelog, so the sink is the keyed
-    upsert MERGE."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_batch(
-            batch_df,
-            os.path.join(out_dir, "state"),
-            keys=["user_id"],
-            offset_col="last_offset",
-            deleted_col=None,
-        )
-
-    q = (
-        stateful_counter(stream_df)
-        .writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_counter(spark: SparkSession, out_dir: str) -> DataFrame:
-    return read_versioned(spark, os.path.join(out_dir, "state"))

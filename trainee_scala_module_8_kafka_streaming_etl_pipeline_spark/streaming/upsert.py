@@ -1,4 +1,5 @@
-"""Keyed-upsert sink with delete propagation (reference S9/E2).
+"""Keyed-upsert sink with delete propagation (reference S9/E2), and the
+one commit protocol and runner every streaming state sink shares.
 
 The reference's Elasticsearch sink writes each record under doc ``_id`` =
 record key, so re-delivery and key updates overwrite idempotently
@@ -13,9 +14,18 @@ Spark-first equivalent: a **versioned parquet state table** maintained by
 
 i.e. latest-offset-per-key wins, keys whose latest record is a delete
 are dropped — then written as a new version directory with an atomically
-swapped pointer file.  Readers never see a half-written version; a
-failed batch leaves the old pointer (re-run is idempotent because the
-merge is deterministic in (prior, batch)).
+swapped pointer file.  Readers never see a half-written version.
+
+Exactly-once (Structured Streaming's replayable source + epoch-keyed
+sink): every fold commits its result as ``v=<batch_id>`` through
+``write_version`` and reads its prior state through ``read_prior`` — the
+greatest committed version STRICTLY BELOW its own batch id, never the
+pointer.  ``foreachBatch`` is at-least-once: a crash after the pointer
+swap but before the checkpoint commit re-delivers the same batch with
+the same id, and the re-run deterministically overwrites its own
+commit instead of folding the batch in twice (additive sketches would
+otherwise double-count).  A crash before the swap leaves an orphan
+``v=<batch_id>`` that the re-run overwrites.
 
 At scale the same surface is one ``MERGE INTO`` on a Delta/Iceberg table
 (WHEN MATCHED AND __deleted THEN DELETE); the versioned-parquet
@@ -35,14 +45,20 @@ from pyspark.sql import functions as F
 from ..operators.compaction import latest_by_offset
 
 _POINTER = "_LATEST"
+# Versions kept after each commit: the pointer's plus the one below it,
+# which is what a re-delivered batch reads as its prior and what an
+# in-flight reader that resolved the pointer one commit ago still scans.
+# Each commit is a FULL state copy, so this bounds the footprint at
+# 2x state size instead of batch count x state size.
+_KEEP = 2
 
 # (version-dir path -> StructType) recorded by write_version at commit
 # time: read_state then declares the schema instead of re-running parquet
 # footer inference (~60 ms of driver latency per read — every micro-batch
-# merge reads 1-2 state tables, round 11).  Keyed by the immutable
-# version dir (never rewritten in place; vacuumed dirs simply age out of
-# use), with inference as the fallback for readers in a fresh process
-# (crash replay, external readers).
+# merge reads 1-2 state tables, round 11).  Keyed by the version dir,
+# which only a re-run of its own batch rewrites (re-recording the entry),
+# with inference as the fallback for readers in a fresh process (crash
+# replay, external readers).
 _SCHEMA_MEMO: dict[str, object] = {}
 
 
@@ -54,11 +70,7 @@ def _state_version(state_dir: str) -> int | None:
         return None
 
 
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Current state table, or None before the first committed version."""
-    v = _state_version(state_dir)
-    if v is None:
-        return None
+def _read_version(spark: SparkSession, state_dir: str, v: int) -> DataFrame:
     path = os.path.join(state_dir, f"v={v}")
     schema = _SCHEMA_MEMO.get(path)
     if schema is not None:
@@ -66,14 +78,63 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
+def _versions(state_dir: str) -> list[int]:
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(state_dir)
+        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
+    )
+
+
+def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """Current state table, or None before the first committed version."""
+    v = _state_version(state_dir)
+    return None if v is None else _read_version(spark, state_dir, v)
+
+
+def _checked_pointer(state_dir: str, batch_id: int) -> int | None:
+    """The committed pointer, after checking that batch ``batch_id`` may
+    fold into this state.  A batch id below the pointer means the
+    checkpoint was reset next to a live state dir: folding would rewind
+    the pointer and leave later batches reading stale higher versions,
+    so it fails loudly instead.  An id EQUAL to the pointer is a
+    legitimate re-delivery, which a reset after a single committed
+    batch cannot be told apart from."""
+    cur = _state_version(state_dir)
+    if cur is not None and batch_id < cur:
+        raise RuntimeError(
+            f"{state_dir}: batch {batch_id} is below the committed version "
+            f"{cur}; the checkpoint does not belong to this state dir"
+        )
+    return cur
+
+
+def read_prior(
+    spark: SparkSession, state_dir: str, batch_id: int
+) -> DataFrame | None:
+    """A fold's input state: the greatest committed version strictly
+    below ``batch_id``, or None if there is none.  Normally that is the
+    pointer; on a re-delivered batch (pointer == batch_id) it is the
+    version the first run folded into, so the re-run overwrites its own
+    commit instead of folding the batch in twice.  An orphan
+    ``v=<batch_id>`` left by a crash before the swap is never read."""
+    cur = _checked_pointer(state_dir, batch_id)
+    if cur is None:
+        return None
+    if cur < batch_id:
+        return read_state(spark, state_dir)
+    below = [v for v in _versions(state_dir) if v < batch_id]
+    return _read_version(spark, state_dir, below[-1]) if below else None
+
+
 def upsert_batch(
     batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
     keys: Sequence[str],
     offset_col: str,
     deleted_col: str | None = "__deleted",
     allow_schema_evolution: bool = False,
-    retain: int | None = 2,
     skip_empty_probe: bool = False,
 ) -> None:
     """One MERGE: fold ``batch_df`` into the state table at ``state_dir``.
@@ -106,8 +167,7 @@ def upsert_batch(
     (new rows carry NULL).  Off by default so unexpected schema drift in
     a fixed-schema pipeline still fails loudly.
     """
-    spark = batch_df.sparkSession
-    prior = read_state(spark, state_dir)
+    prior = read_prior(batch_df.sparkSession, state_dir, batch_id)
     # Empty-batch fast path (round 11): availableNow runs trailing
     # no-data micro-batches (watermark advancement), and folding an
     # empty batch into existing state is a provable no-op — merged =
@@ -116,8 +176,8 @@ def upsert_batch(
     # physically dropped).  Profiled at sf0.1: the flagship pipeline's
     # no-data batch paid the full 1.3 s read+merge+write; the limit-1
     # probe costs one cheap batch-plan execution instead.  Only valid
-    # when prior state exists (first batch must still write v=0 even if
-    # empty) and because ``transform`` is row-bounded (enrichment joins
+    # when prior state exists (the first commit must still be written
+    # even if empty) and because ``transform`` is row-bounded (enrichment joins
     # never invent rows from an empty batch).  ``skip_empty_probe``
     # (round 12): keyed_upsert_sink probes the RAW persisted batch
     # before its transform — re-probing the transformed plan here would
@@ -142,30 +202,16 @@ def upsert_batch(
     if deleted_col:
         compacted = compacted.filter(~F.col(deleted_col)).drop(deleted_col)
 
-    write_version(compacted, state_dir, retain=retain)
+    write_version(compacted, state_dir, batch_id)
 
 
-def write_version(
-    df: DataFrame, state_dir: str, retain: int | None = 2
-) -> None:
-    """Commit ``df`` as the next state version with an atomic pointer
-    swap — the shared primitive under every state table (upsert MERGE,
-    sketch register merges).
-
-    After a successful swap, versions older than the newest ``retain``
-    are vacuumed (pass ``retain=None`` to keep everything, e.g. for a
-    time-travel fixture).  Without retention every micro-batch leaves a
-    full state copy behind, so the sink's disk footprint grows with
-    batch COUNT × state size rather than state size.  Every sink
-    factory (keyed_upsert_sink, topn_sink, the sketch/bars/ewma/drift/
-    reservoir/cohort merges) threads its own ``retain`` through to
-    here, so a deployment with external time-travel readers opts out at
-    the sink it configures rather than patching call sites.
-    """
-    prev = _state_version(state_dir)
-    next_v = 0 if prev is None else prev + 1
+def write_version(df: DataFrame, state_dir: str, batch_id: int) -> None:
+    """Commit ``df`` as state version ``v=<batch_id>`` (an idempotent
+    overwrite) with an atomic pointer swap, then vacuum to the newest
+    ``_KEEP`` versions — the one commit primitive under every state
+    table (upsert MERGE, sketch and sequence folds)."""
     os.makedirs(state_dir, exist_ok=True)
-    vdir = os.path.join(state_dir, f"v={next_v}")
+    vdir = os.path.join(state_dir, f"v={batch_id}")
     df.write.mode("overwrite").parquet(vdir)
     # keep only the newest version's schema per state dir — a long-lived
     # sink must not grow the memo by one entry per batch
@@ -175,33 +221,25 @@ def write_version(
     _SCHEMA_MEMO[vdir] = df.schema
     tmp = os.path.join(state_dir, f"{_POINTER}.tmp")
     with open(tmp, "w") as fh:
-        fh.write(str(next_v))
+        fh.write(str(batch_id))
     os.replace(tmp, os.path.join(state_dir, _POINTER))
-    if retain is not None:
-        vacuum_versions(state_dir, keep=retain)
+    vacuum_versions(state_dir)
 
 
-def vacuum_versions(state_dir: str, keep: int = 2) -> list[int]:
-    """Drop state versions older than the newest ``keep`` (never the
+def vacuum_versions(state_dir: str) -> list[int]:
+    """Drop state versions older than the newest ``_KEEP`` (never the
     current pointer).  The MERGE writes a whole new version per batch,
     so without retention the sink's footprint grows with batch COUNT
     rather than state SIZE — at one batch/minute that is 1440 full
-    copies a day.  Safe because readers resolve the pointer first and
-    only the newest version is ever the pointer target; ``keep >= 2``
-    leaves an in-flight reader's version on disk. Returns the dropped
-    version numbers.
+    copies a day.  Returns the dropped version numbers.
     """
     import shutil
 
     cur = _state_version(state_dir)
     if cur is None:
         return []
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(state_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
-    live = set(versions[-keep:]) | {cur}
+    versions = _versions(state_dir)
+    live = set(versions[-_KEEP:]) | {cur}
     dropped = []
     for v in versions:
         if v not in live:
@@ -217,7 +255,6 @@ def keyed_upsert_sink(
     deleted_col: str | None = "__deleted",
     transform: Callable[[DataFrame], DataFrame] | None = None,
     allow_schema_evolution: bool = False,
-    retain: int | None = 2,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function maintaining a keyed-upsert state table —
     the writeStream side of reference S9/E2.  ``transform`` (optional)
@@ -254,28 +291,58 @@ def keyed_upsert_sink(
             # (documented in upsert_batch) — an empty input cannot
             # become non-empty.  On the checkpointed frame the probe
             # is a metadata-cheap limit-1.
-            if _state_version(state_dir) is not None and batch_df.isEmpty():
+            if (
+                _checked_pointer(state_dir, batch_id) is not None
+                and batch_df.isEmpty()
+            ):
                 return
-            out_df = transform(batch_df)
-            upsert_batch(
-                out_df,
-                state_dir,
-                keys,
-                offset_col,
-                deleted_col,
-                allow_schema_evolution=allow_schema_evolution,
-                retain=retain,
-                skip_empty_probe=True,
-            )
-            return
+            batch_df = transform(batch_df)
         upsert_batch(
             batch_df,
             state_dir,
+            batch_id,
             keys,
             offset_col,
             deleted_col,
             allow_schema_evolution=allow_schema_evolution,
-            retain=retain,
+            skip_empty_probe=transform is not None,
         )
 
     return _sink
+
+
+def run_state_stream(
+    stream_df: DataFrame,
+    state_dir: str,
+    fold: Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    trailing_batch: bool = True,
+) -> None:
+    """Run ``fold(batch_df, batch_id)`` as the ``foreachBatch`` function
+    of one availableNow query checkpointed at ``<state_dir>/_ckpt`` and
+    wait for it — the one runner under every streaming state sink.  Each
+    call processes exactly the input that arrived since the previous
+    call on the same state dir (checkpointed source offsets, S7).
+
+    ``trailing_batch=False`` skips the no-data micro-batch availableNow
+    runs after the data, restoring the session conf afterwards.  Only a
+    query that batch cannot change may skip it: a watermark-free
+    update-mode aggregation has nothing to advance or flush.  A
+    watermarked query that spans rounds must keep it, because it commits
+    the final watermark advancement."""
+    spark = stream_df.sparkSession
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key, "true")
+    if not trailing_batch:
+        spark.conf.set(key, "false")
+    try:
+        (
+            stream_df.writeStream.outputMode(output_mode)
+            .foreachBatch(fold)
+            .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.conf.set(key, old)
